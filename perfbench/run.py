@@ -9,18 +9,30 @@ Workloads (see ``workloads.py``): ``extract_fused_uniform`` and
 traced runs also measure ``curate_text`` and ``extract_job_skewed`` as
 companions, which run on their own too. The run generates the
 workload's input from the seed, sets up a Spark ``local[N]`` session
-(N = min(4, nproc)) three times, makes two warm-up passes (the first,
-cold one is checked) and then runs passes in a closed loop (the next pass
-starts when the previous one ends) for ``--seconds`` seconds of pass time.
-The last pass is checked too.
+three times, makes three warm-up passes (the first, cold one is checked)
+and then runs passes in a closed loop (the next pass starts when the
+previous one ends) for ``--seconds`` seconds of pass time. The last pass
+is checked too. N = min(4, nproc) - 1: one vCPU is left to the JVM's own
+threads (JIT, GC) and the driver, which otherwise preempt the workers.
 
-With ``--trace 0`` the metrics are end to end: the median pass wall and the
-rates derived from it, the set-up time and the peak RSS of the JVM and
-its Python workers. With ``--trace 1`` untraced and traced passes
-alternate, the Spark event log is on, and the metrics are per layer: span
-times, event-log task metrics per labelled span, and probes of single
-layers (scan, Arrow boundary, the kernel in one process) and one warm
-pass of the companion workload.
+With ``--trace 0`` the metrics are end to end: the median CPU time a pass
+costs the engine (the JVM and its Python workers, JIT compilation left
+out) and the rates derived from it, the CPU time of a set-up, and the peak
+RSS of a Python worker. The CPU times are normalised to a fixed host
+speed, measured with a reference loop (see ``REF_NOMINAL_S``). The raw CPU
+times and the walls of the passes and set-ups are printed too, but are
+not among the JSON metrics: they follow whatever else the host runs. On a
+shared 4-vCPU VM the median pass wall of the same code spread by 20-67%
+of its median over ten runs; with three busy processes beside it a fused
+pass took 65% longer but only 10% more CPU, and as the host's own load
+changed, the raw CPU of a pass moved by up to 40%.
+
+With ``--trace 1`` untraced and traced passes alternate, the Spark event
+log is on, and the metrics are per layer: span times, the split of a
+pass's CPU between the JVM, its JIT and the Python workers, event-log task
+metrics per labelled span, and probes of single layers (scan, Arrow
+boundary, the kernel in one process) and one warm pass of the companion
+workload.
 
 The last line of standard output is one JSON object with the keys
 ``correct``, ``attempted``, ``failed`` and ``metrics``. Host facts, the
@@ -52,13 +64,23 @@ ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(1, str(ROOT))
 MB = 1 << 20
 SETUPS = 3
+WARM_PASSES = 2  # untimed, after the checked cold pass
 KERNEL_SAMPLE = 1000
+
+# The host's speed, as the CPU time of a fixed pure-Python loop that a
+# thread of this process runs every 50 ms (``SpeedSampler``). CPU times
+# are reported scaled to a host on which the loop takes REF_NOMINAL_S. On
+# a shared 4-vCPU VM the CPU of the same fused pass moved by 40% between
+# runs minutes apart (4.1 to 5.7 s), switching between a fast and a slow
+# state that the loop's time followed (about 1.1 and 1.5 ms).
+REF_LOOP_N = 20_000
+REF_NOMINAL_S = 0.0015
 
 END_TO_END_UNITS = {
     "setup_s": "s",
-    "wall_s": "s",
-    "docs_per_s": "1/s",
-    "input_mb_per_s": "MB/s",
+    "norm_cpu_s": "s",
+    "docs_per_norm_cpu_s": "1/s",
+    "input_mb_per_norm_cpu_s": "MB/s",
     "peak_worker_rss_mb": "MB",
 }
 
@@ -209,18 +231,29 @@ def _warm_worker(batches):
     yield pa.RecordBatch.from_pydict({"n": [n]})
 
 
+def current_jvm_pid() -> int | None:
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    return gateway.proc.pid if gateway is not None else None
+
+
 def set_up(extra_conf: dict, cores: int):
-    """``get_spark`` plus one action that starts every Python worker."""
+    """``get_spark`` plus one action that starts every Python worker.
+    Returns the session, the wall seconds of both steps and the CPU
+    seconds the engine spent on them."""
     from comic_text_detector_spark.session import get_spark
 
+    c0 = engine_cpu(current_jvm_pid())
     t0 = time.perf_counter()
     spark = get_spark(app_name="perfbench", master=f"local[{cores}]",
                       extra_conf=extra_conf)
     t1 = time.perf_counter()
     spark.range(0, cores, 1, cores).mapInArrow(_warm_worker, "n long").collect()
     t2 = time.perf_counter()
+    cpu = cpu_seconds(c0, engine_cpu(current_jvm_pid()))
     spark.sparkContext.setLogLevel("ERROR")
-    return spark, t1 - t0, t2 - t1
+    return spark, t1 - t0, t2 - t1, cpu
 
 
 def stop_spark(spark) -> None:
@@ -345,7 +378,8 @@ def median(xs):
     return statistics.median(xs) if xs else 0.0
 
 
-def per_layer(wl, ledger, cores: int, walls: dict, setups: list,
+def per_layer(wl, ledger, cores: int, walls: dict, cpus: dict,
+              jvm_cpus: list, jit_cpus: list, ref_s: float, setups: list,
               probes: dict, first_pass_s: float, sampler) -> dict:
     """Per-layer metrics from spans, event-log jobs and probes; a layer the
     workload does not run reads 0."""
@@ -362,6 +396,13 @@ def per_layer(wl, ledger, cores: int, walls: dict, setups: list,
     for k in engine[0]:
         m[k] = median([e[k] for e in engine])
     top = [sum(c.seconds for c in ledger.tracer.children(p)) for p in passes]
+    m["pass.wall_s"] = median(walls["untraced"])
+    m["pass.cpu_s"] = median(cpus["untraced"])
+    m["host.ref_loop_ms"] = ref_s * 1000
+    m["pass.jvm_cpu_s"] = median(jvm_cpus)
+    m["pass.jit_cpu_s"] = median(jit_cpus)
+    m["pass.worker_cpu_s"] = median(
+        [c - j for c, j in zip(cpus["untraced"], jvm_cpus)])
     m["trace.overhead_s"] = median(walls["traced"]) - median(walls["untraced"])
     m["trace.top_spans_s"] = median(top)
     m["trace.top_spans_share"] = median(top) / median(walls["untraced"])
@@ -399,7 +440,8 @@ def layer_unit(name: str) -> str:
 
 PER_LAYER = [
     "session.start_s", "session.worker_warm_s", "session.jvm_setup_s",
-    "session.first_pass_s",
+    "session.first_pass_s", "host.ref_loop_ms", "pass.wall_s", "pass.cpu_s",
+    "pass.jvm_cpu_s", "pass.worker_cpu_s", "pass.jit_cpu_s",
     "memory.peak_rss_mb", "memory.peak_jvm_rss_mb",
     "sources.scan_s", "sources.input_mb",
     "extract.arrow_boundary_s", "extract.kernel_us_per_doc",
@@ -420,6 +462,92 @@ PER_LAYER = [
 ]
 
 
+def engine_cpu(jvm_pid: int | None) -> dict[int, int]:
+    """CPU ticks (user + system) used so far by each live process of the
+    engine: the JVM and every process under it, its Python workers
+    included. ``{}`` before the JVM is launched."""
+    kids: dict[int, list[int]] = {}
+    ticks: dict[int, int] = {}
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/stat") as f:
+                stat = f.read()
+        except (FileNotFoundError, ProcessLookupError):
+            continue
+        fields = stat[stat.rindex(")") + 2:].split()
+        kids.setdefault(int(fields[1]), []).append(int(d))
+        # utime and stime, fields 14 and 15 of proc(5)
+        ticks[int(d)] = int(fields[11]) + int(fields[12])
+    out, todo = {}, [jvm_pid] if jvm_pid in ticks else []
+    while todo:
+        pid = todo.pop()
+        out[pid] = ticks[pid]
+        todo.extend(k for k in kids.get(pid, []) if k in ticks)
+    return out
+
+
+def cpu_seconds(before: dict[int, int], after: dict[int, int]) -> float:
+    """CPU the engine used between two ``engine_cpu`` snapshots. A process
+    that ended in between counts for nothing: the workers of a pass live as
+    long as its session, and the workers a stopped session leaves behind
+    are not reaped by the engine, so their time cannot be followed."""
+    ticks = sum(t - before.get(pid, 0) for pid, t in after.items())
+    return ticks / os.sysconf("SC_CLK_TCK")
+
+
+def jit_ticks(jvm_pid: int) -> dict[int, int]:
+    """CPU ticks used so far by each live JIT compiler thread of the JVM."""
+    out = {}
+    for tid in os.listdir(f"/proc/{jvm_pid}/task"):
+        try:
+            with open(f"/proc/{jvm_pid}/task/{tid}/stat") as f:
+                stat = f.read()
+        except (FileNotFoundError, ProcessLookupError):
+            continue
+        if stat[stat.index("(") + 1:].startswith(("C1 Compiler", "C2 Compiler")):
+            fields = stat[stat.rindex(")") + 2:].split()
+            out[int(tid)] = int(fields[11]) + int(fields[12])
+    return out
+
+
+def ref_loop_s() -> float:
+    """CPU seconds of one run of the reference loop."""
+    t = time.thread_time()
+    x = 0
+    for i in range(REF_LOOP_N):
+        x += i * i
+    return time.thread_time() - t
+
+
+class SpeedSampler(threading.Thread):
+    """Runs the reference loop every ``PERIOD_S`` and keeps each sample
+    with its time. The loop's CPU time leaves out time the thread waits,
+    so it follows the speed of the CPU, not how busy the VM is."""
+
+    PERIOD_S = 0.05
+
+    def __init__(self):
+        super().__init__(daemon=True)
+        self.samples: list[tuple[float, float]] = []
+        self._halt = threading.Event()
+
+    def run(self) -> None:
+        while not self._halt.wait(self.PERIOD_S):
+            self.samples.append((time.perf_counter(), ref_loop_s()))
+
+    def stop(self) -> None:
+        self._halt.set()
+        self.join()
+
+    def scale(self, t0: float, t1: float) -> float:
+        """Factor that takes a CPU time spent between ``t0`` and ``t1`` to
+        the nominal host: REF_NOMINAL_S over the mean loop time then."""
+        xs = [r for t, r in self.samples if t0 <= t <= t1]
+        return REF_NOMINAL_S / statistics.mean(xs or [REF_NOMINAL_S])
+
+
 def cpu_ticks() -> tuple[int, int]:
     """(steal, total) jiffies of all CPUs, from /proc/stat."""
     with open("/proc/stat") as f:
@@ -427,13 +555,25 @@ def cpu_ticks() -> tuple[int, int]:
     return vals[7], sum(vals[:8])
 
 
-def measure(wl, tracer, sc, seconds: float, trace: bool):
+def measure(wl, tracer, sc, seconds: float, trace: bool, speed):
     """The closed loop: passes back to back until ``seconds`` of pass time
     have run. With ``trace``, untraced and traced passes alternate, at
-    least one of each. The output of the last pass is kept for its check."""
+    least one of each. Each pass's wall and engine CPU time are recorded.
+    The CPU of the JVM's JIT compiler threads is kept apart: it compiles
+    for the passes to come, and a minute into a run it still took ~10% of a
+    pass's CPU and kept falling, so it would make the pass CPU depend on
+    how far the JIT has got. The output of the last pass is kept for its
+    check. Each untraced pass's CPU is also scaled by ``speed`` to the
+    nominal host."""
     counter = TaskCounter(sc)
     sampler = RssSampler(sc._gateway.proc.pid, sc.defaultParallelism + 1)
     walls: dict[str, list[float]] = {"untraced": [], "traced": []}
+    cpus: dict[str, list[float]] = {"untraced": [], "traced": []}
+    # the JVM's share of each untraced pass, and its JIT compilers' time
+    jvm_cpus: list[float] = []
+    jit_cpus: list[float] = []
+    norm_cpus: list[float] = []
+    jvm_pid = sc._gateway.proc.pid
     attempts = failed = 0
     ticks0 = cpu_ticks()
     sampler.start()
@@ -441,11 +581,21 @@ def measure(wl, tracer, sc, seconds: float, trace: bool):
         while True:
             traced = trace and len(walls["untraced"]) > len(walls["traced"])
             tracer.enabled = traced
+            c0, j0 = engine_cpu(jvm_pid), jit_ticks(jvm_pid)
             t0 = time.perf_counter()
             with tracer.span("pass"):
                 wl.run_pass()
             walls["traced" if traced else "untraced"].append(
                 time.perf_counter() - t0)
+            c1, jit = engine_cpu(jvm_pid), cpu_seconds(j0, jit_ticks(jvm_pid))
+            cpus["traced" if traced else "untraced"].append(
+                cpu_seconds(c0, c1) - jit)
+            if not traced:
+                norm_cpus.append(cpus["untraced"][-1]
+                                 * speed.scale(t0, t0 + walls["untraced"][-1]))
+                jit_cpus.append(jit)
+                jvm_cpus.append(cpu_seconds({jvm_pid: c0[jvm_pid]},
+                                            {jvm_pid: c1[jvm_pid]}) - jit)
             tracer.enabled = False
             a, f = counter.delta()
             attempts += a
@@ -457,7 +607,8 @@ def measure(wl, tracer, sc, seconds: float, trace: bool):
     finally:
         sampler.stop()
     steal, total = (b - a for a, b in zip(ticks0, cpu_ticks()))
-    return walls, failed / max(attempts, 1), sampler, steal / max(total, 1)
+    return (walls, cpus, norm_cpus, jvm_cpus, jit_cpus,
+            failed / max(attempts, 1), sampler, steal / max(total, 1))
 
 
 def run(args, work: Path, results: Path) -> dict:
@@ -465,7 +616,7 @@ def run(args, work: Path, results: Path) -> dict:
     import pyspark
 
 
-    cores = min(4, len(os.sched_getaffinity(0)))
+    cores = max(1, min(4, len(os.sched_getaffinity(0))) - 1)
     extra_conf = configure_env(work, bool(args.trace))
     phases: dict[str, float] = {}
     clock = [time.perf_counter()]
@@ -476,13 +627,17 @@ def run(args, work: Path, results: Path) -> dict:
         clock[0] = now
 
     spark = comp = None
+    speed = SpeedSampler()
     try:
+        speed.start()
         setups = []
         for _ in range(SETUPS):
             if spark is not None:
                 spark.stop()
-            spark, start_s, warm_s = set_up(extra_conf, cores)
-            setups.append((start_s, warm_s))
+            t0 = time.perf_counter()
+            spark, start_s, warm_s, cpu = set_up(extra_conf, cores)
+            setups.append((start_s, warm_s,
+                           cpu * speed.scale(t0, time.perf_counter())))
         phase("setups")
         sc = spark.sparkContext
         host = {
@@ -507,13 +662,16 @@ def run(args, work: Path, results: Path) -> dict:
         checks = [wl.first_pass()]
         first_pass_s = time.perf_counter() - t0
         wl.cleanup()
-        # one more untimed pass: the first timed pass after a single
-        # warm-up still ran ~10% slow while the JIT settled
-        wl.run_pass()
-        wl.cleanup()
+        # more untimed passes: the JVM's CPU per fused pass kept falling
+        # for ~20 passes while the JIT settled (2.4 s to 0.7 s of ~7 s at
+        # local[4])
+        for _ in range(WARM_PASSES):
+            wl.run_pass()
+            wl.cleanup()
         phase("warm_up")
-        walls, failed_ratio, sampler, steal = measure(
-            wl, tracer, sc, args.seconds, bool(args.trace))
+        (walls, cpus, norm_cpus, jvm_cpus, jit_cpus, failed_ratio, sampler,
+         steal) = measure(wl, tracer, sc, args.seconds, bool(args.trace),
+                          speed)
         phase("passes")
         if wl.checks_last_pass:
             checks.append(wl.check())
@@ -531,37 +689,56 @@ def run(args, work: Path, results: Path) -> dict:
                 phase("companion")
         app_id = sc.applicationId
     finally:
+        if speed.is_alive():
+            speed.stop()
         if spark is not None:
             stop_spark(spark)
             phase("stop")
 
     wall_s = median(walls["untraced"])
+    cpu_s = median(cpus["untraced"])
+    norm_cpu_s = median(norm_cpus)
+    ref_s = median([r for _, r in speed.samples])
     e2e = {
-        "setup_s": median([s + w for s, w in setups]),
-        "wall_s": wall_s,
-        "docs_per_s": wl.docs / wall_s,
-        "input_mb_per_s": wl.input_bytes / MB / wall_s,
+        "setup_s": median([c for _, _, c in setups]),
+        "norm_cpu_s": norm_cpu_s,
+        "docs_per_norm_cpu_s": wl.docs / norm_cpu_s,
+        "input_mb_per_norm_cpu_s": wl.input_bytes / MB / norm_cpu_s,
         "peak_worker_rss_mb": sampler.peak_worker / MB,
     }
     wrong = sum(checks)
     lines = [f"{'metric':<22}{'value':>14}  unit"]
     lines += [f"{k:<22}{v:>14.4f}  {END_TO_END_UNITS[k]}" for k, v in e2e.items()]
-    # printed, but not among BENCHMARK.json's metrics: the JVM's RSS under
-    # G1 moved between 1.3 and 1.9 GB in identical runs, and the two below
-    # are 0 whenever the run is correct
+    # printed, but not among BENCHMARK.json's metrics: the raw pass CPU and
+    # the walls follow the host (the module docstring says how far), the
+    # JVM's RSS under G1 moved between 1.3 and 1.9 GB in identical runs,
+    # and the last two are 0 whenever the run is correct
+    lines.append(f"{'cpu_s':<22}{cpu_s:>14.4f}  s")
+    lines.append(f"{'ref_loop_ms':<22}{ref_s * 1000:>14.4f}  ms")
+    lines.append(f"{'setup_wall_s':<22}"
+                 f"{median([s + w for s, w, _ in setups]):>14.4f}  s")
+    lines.append(f"{'wall_s':<22}{wall_s:>14.4f}  s")
+    lines.append(f"{'docs_per_s':<22}{wl.docs / wall_s:>14.4f}  1/s")
+    lines.append(f"{'input_mb_per_s':<22}"
+                 f"{wl.input_bytes / MB / wall_s:>14.4f}  MB/s")
     lines.append(f"{'peak_rss_mb':<22}{sampler.peak_total / MB:>14.4f}  MB")
     lines.append(f"{'wrong_rows':<22}{wrong:>14d}  count")
     lines.append(f"{'failed_task_ratio':<22}{failed_ratio:>14.4f}  ratio")
     lines.append(f"cpu steal during passes {steal:.3f}, "
                  f"phases_s {json.dumps(phases)}")
+    lines.append("setups_s " + json.dumps([[round(x, 3) for x in s] for s in setups]))
+    lines.append("pass_jvm_cpu_s " + json.dumps([round(c, 3) for c in jvm_cpus]))
+    lines.append("pass_jit_cpu_s " + json.dumps([round(c, 3) for c in jit_cpus]))
     lines.append("pass_walls_s " + json.dumps(
         {k: [round(w, 3) for w in v] for k, v in walls.items()}))
+    lines.append("pass_cpu_s " + json.dumps(
+        {k: [round(w, 3) for w in v] for k, v in cpus.items()}))
     metrics = {k: {"value": v, "unit": END_TO_END_UNITS[k]}
                for k, v in e2e.items()}
     if args.trace:
         ledger = Ledger(tracer, read_event_log(work / "eventlog" / app_id))
-        layers = per_layer(wl, ledger, cores, walls, setups, probes,
-                           first_pass_s, sampler)
+        layers = per_layer(wl, ledger, cores, walls, cpus, jvm_cpus, jit_cpus,
+                           ref_s, setups, probes, first_pass_s, sampler)
         if comp is not None:
             layers.update(comp.layers(ledger))
         lines += layer_table(ledger)
@@ -574,8 +751,9 @@ def run(args, work: Path, results: Path) -> dict:
 
     result = {
         "correct": wrong == 0,
-        # two warm-up passes, the timed ones, and the companion's two
-        "attempted": 2 + len(walls["untraced"]) + len(walls["traced"])
+        # the warm-up passes, the timed ones, and the companion's two
+        "attempted": 1 + WARM_PASSES + len(walls["untraced"])
+        + len(walls["traced"])
         + 2 * (comp is not None),
         "failed": sum(w > 0 for w in checks),
         "metrics": metrics,
@@ -583,6 +761,9 @@ def run(args, work: Path, results: Path) -> dict:
     (results / f"{args.workload}-seed{args.seed}-trace{args.trace}.json"
      ).write_text(json.dumps({
          "host": host, "phases_s": phases, "pass_walls_s": walls,
+         "pass_cpu_s": cpus, "pass_jvm_cpu_s": jvm_cpus,
+         "pass_jit_cpu_s": jit_cpus, "pass_norm_cpu_s": norm_cpus,
+         "ref_loop_s": speed.samples,
          "wrong_rows": wrong, "failed_task_ratio": failed_ratio,
          "peak_rss_mb": sampler.peak_total / MB,
          "peak_jvm_rss_mb": sampler.peak_jvm / MB,

@@ -110,6 +110,32 @@ def test_event_log_attaches_tasks_to_job_groups(tmp_path):
     assert m["spark.slot_busy_ratio"] == pytest.approx(0.45 / 1.0)
 
 
+def test_cpu_seconds_counts_live_processes_only():
+    import os
+
+    import run
+
+    hz = os.sysconf("SC_CLK_TCK")
+    before = {1: 10 * hz, 2: 5 * hz, 3: 7 * hz}
+    # 1 kept running, 2 ended, 4 started
+    after = {1: 12 * hz, 4: 3 * hz}
+    assert run.cpu_seconds(before, after) == pytest.approx(5.0)
+    assert run.cpu_seconds({}, after) == pytest.approx(15.0)
+    tree = run.engine_cpu(os.getpid())
+    assert os.getpid() in tree and all(t >= 0 for t in tree.values())
+    assert run.engine_cpu(None) == {}
+
+
+def test_speed_scale_uses_the_samples_inside_the_interval():
+    import run
+
+    assert run.ref_loop_s() > 0
+    speed = run.SpeedSampler()
+    speed.samples = [(1.0, 0.003), (2.0, 0.001), (5.0, 1.0)]
+    assert speed.scale(0.5, 2.5) == pytest.approx(run.REF_NOMINAL_S / 0.002)
+    assert speed.scale(3.0, 4.0) == pytest.approx(1.0)
+
+
 def _text_bytes(rows, col):
     return sum(len(r[col]) for r in rows)
 

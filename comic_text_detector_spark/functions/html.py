@@ -276,9 +276,9 @@ def tokenize(html_bytes: bytes | str) -> list[Node]:
     # str input is accepted so the Arrow batch layer can decode utf-8
     # straight from the record-batch buffers (plans/extract.py) without
     # materializing an intermediate bytes object per document. The check
-    # is inverted (str first) so bytes-like inputs that are NOT bytes —
-    # bytearray from a collected Spark BinaryType row, memoryview — keep
-    # hitting .decode exactly as before.
+    # is inverted (str first) so bytearray (a collected Spark BinaryType
+    # row) keeps taking the .decode branch with bytes; other buffer types
+    # such as memoryview have no .decode and are not accepted.
     s = (
         html_bytes
         if isinstance(html_bytes, str)

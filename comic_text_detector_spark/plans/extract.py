@@ -38,6 +38,7 @@ Scoring model (the two-head analog):
 
 from __future__ import annotations
 
+import time
 from collections.abc import Iterator
 
 import pyarrow as pa
@@ -57,7 +58,10 @@ GAP_FACTOR = 2.0  # split when gap > 2 x mean extent (textblock.py:403)
 
 
 # ---------------------------------------------------------------------------
-# Pure per-document kernel (shared by both plans' UDF stage)
+# Pure per-document kernel. One Arrow batch loop runs it
+# (``_extract_batches``): it serves ``extract_fused`` — and through it the
+# streaming and annotate paths — and the durable runner's ``run_extract``.
+# The relational plan reuses only the tokenizer.
 # ---------------------------------------------------------------------------
 
 
@@ -187,9 +191,10 @@ def _decode_html(arr: pa.Array) -> list[str | None]:
     code = _OFFSET_CODE.get(arr.type)
     if code is None or arr.null_count or len(arr) == 0:
         # unknown layout / null cells / empty array (whose offsets buffer
-        # may be absent): the plain per-cell path
+        # may be absent): the plain per-cell path; str cells (string
+        # layouts) and nulls pass through as they are
         return [
-            None if b is None else b.decode("utf-8", "replace")
+            b.decode("utf-8", "replace") if isinstance(b, bytes) else b
             for b in arr.to_pylist()
         ]
     bufs = arr.buffers()
@@ -202,10 +207,21 @@ def _decode_html(arr: pa.Array) -> list[str | None]:
     ]
 
 
-def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _extract_batches(
+    batches: Iterator[pa.RecordBatch], proc_us: bool = False
+) -> Iterator[pa.RecordBatch]:
+    """The one Arrow batch loop over ``extract_document``.
+
+    The ``html`` column is replaced in place by ``text`` and ``spans``;
+    every other input column passes through as a zero-copy slice, so
+    ``(url, html)`` yields ``EXTRACTED_SCHEMA`` and the runner's
+    ``(url, html, partition_id, in_bytes)`` carries its lineage along.
+    ``proc_us=True`` appends a ``proc_us`` column of per-document kernel
+    microseconds (the runner's ``metrics.wall_ms``); without it nothing
+    is timed.
+    """
     span_fields = list(_SPAN_PA.value_type)
     for batch in batches:
-        urls = batch.column("url")
         html_arr = batch.column("html")
         n = batch.num_rows
         if n and html_arr.nbytes > _SLICE_TARGET_BYTES:
@@ -213,8 +229,8 @@ def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
         else:
             rows_per = max(n, 1)
         for off in range(0, n, rows_per):
-            u = urls.slice(off, rows_per)
             texts: list[str] = []
+            timed: list[int] | None = [] if proc_us else None
             # spans build flat (three int columns + a ListArray offsets
             # vector) instead of one dict per span: same Arrow values,
             # ~2.5x less construction time per batch
@@ -224,7 +240,12 @@ def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
             offsets: list[int] = [0]
             n_spans = 0
             for h in _decode_html(html_arr.slice(off, rows_per)):
-                text, spans = extract_document(h)
+                if timed is None:
+                    text, spans = extract_document(h)
+                else:
+                    t0 = time.perf_counter_ns()
+                    text, spans = extract_document(h)
+                    timed.append((time.perf_counter_ns() - t0) // 1000)
                 texts.append(text)
                 for b, s, e in spans:
                     flat_b.append(b)
@@ -243,14 +264,19 @@ def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
                     fields=span_fields,
                 ),
             )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    u.combine_chunks() if isinstance(u, pa.ChunkedArray) else u,
-                    pa.array(texts, type=pa.string()),
-                    spans_arr,
-                ],
-                names=["url", "text", "spans"],
-            )
+            arrays: list[pa.Array] = []
+            names: list[str] = []
+            for name, col in zip(batch.schema.names, batch.columns):
+                if name == "html":
+                    arrays += [pa.array(texts, type=pa.string()), spans_arr]
+                    names += ["text", "spans"]
+                else:
+                    arrays.append(col.slice(off, rows_per))
+                    names.append(name)
+            if timed is not None:
+                arrays.append(pa.array(timed, type=pa.int64()))
+                names.append("proc_us")
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
 
 
 def extract_fused(documents: DataFrame, num_partitions: int | None = None) -> DataFrame:

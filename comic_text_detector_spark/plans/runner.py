@@ -13,12 +13,17 @@ Physical design (two passes, both scale-shaped):
    directory-addressed.
 2. **Chunk jobs.** Each chunk reads ONLY its ``chunk_id=K`` directory
    (partition-pruned scan — no filter over the full input, no recompute of
-   the dedup lineage, no shuffle at all inside the chunk), runs the fused
-   Arrow extraction, and appends its output partitioned by chunk_id. The
-   output commit IS the checkpoint: completion is derived from the data at
-   partition_id granularity (staged partition set minus committed partition
-   set), so a crash mid-chunk reruns exactly the partitions whose output is
-   not visible — exactly-once per url without a two-phase protocol.
+   the dedup lineage, no shuffle at all inside the chunk), runs the Arrow
+   extraction, and appends its output partitioned by chunk_id. One batch
+   loop, ``plans/extract.py::_extract_batches``, serves ``extract_fused``,
+   the streaming and annotate paths and this runner alike: ``partition_id``
+   and ``in_bytes`` (``octet_length(html)``, computed in Spark) ride through
+   it as pass-through columns, and its byte-bounded slicing bounds
+   per-batch memory here too. The output commit IS the checkpoint:
+   completion is derived from the data at partition_id granularity
+   (staged partition set minus committed partition set), so a crash
+   mid-chunk reruns exactly the partitions whose output is not visible —
+   exactly-once per url without a two-phase protocol.
    Committer fine print: with a job-atomic committer (fileoutputcommitter
    v1, the local/HDFS default) chunk output is all-or-nothing and the
    inference is trivially safe. Under committers that expose TASK output
@@ -35,7 +40,8 @@ After each chunk commits, one ``metrics`` row per logical partition
 (run_id, partition_id, docs_in, docs_out, bytes, wall_ms, ts) is appended —
 pure lineage/observability (FIXTURES.md §4), never a correctness input.
 ``wall_ms`` sums the per-document kernel time measured inside the Arrow
-stage (the skew evidence the north_rule asks for).
+stage (the loop's ``proc_us`` column; the skew evidence the north_rule
+asks for).
 
 In the sandbox the sinks are parquet directories; on a real deployment
 staging/output/metrics are Iceberg tables (``writeTo(...).append()``,
@@ -46,57 +52,27 @@ from __future__ import annotations
 
 import os
 import time
-from collections.abc import Iterator
+from functools import partial
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.dedup import asof_dedup
-from .extract import _SPAN_PA, extract_document
+from ..schemas import EXTRACTED_SCHEMA
+from .extract import _extract_batches
 
-_COMBINED_FIELDS = [
-    ("url", pa.string()),
-    ("text", pa.string()),
-    ("spans", _SPAN_PA),
-    ("partition_id", pa.int32()),
-    ("in_bytes", pa.int64()),
-    ("proc_us", pa.int64()),
-]
-_COMBINED_DDL = (
-    "url string, text string, "
-    "spans array<struct<block_id:int,char_start:int,char_end:int>>, "
-    "partition_id int, in_bytes bigint, proc_us bigint"
+# extract_fused's output plus the lineage columns _extract_batches passes
+# through (partition_id, in_bytes) or adds (proc_us); every field nullable,
+# so a staged row with a null url is written rather than failing its task
+_LINEAGE_SCHEMA = T.StructType(
+    [
+        *(T.StructField(f.name, f.dataType) for f in EXTRACTED_SCHEMA.fields),
+        T.StructField("partition_id", T.IntegerType()),
+        T.StructField("in_bytes", T.LongType()),
+        T.StructField("proc_us", T.LongType()),
+    ]
 )
-
-
-def _extract_with_lineage(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    for batch in batches:
-        urls = batch.column("url").to_pylist()
-        htmls = batch.column("html").to_pylist()
-        pids = batch.column("partition_id").to_pylist()
-        texts, spans_col, in_bytes, proc_us = [], [], [], []
-        for h in htmls:
-            t0 = time.perf_counter_ns()
-            text, spans = extract_document(h)
-            dt = (time.perf_counter_ns() - t0) // 1000
-            texts.append(text)
-            spans_col.append(
-                [{"block_id": b, "char_start": s, "char_end": e} for b, s, e in spans]
-            )
-            in_bytes.append(len(h) if h is not None else 0)
-            proc_us.append(dt)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(urls, type=pa.string()),
-                pa.array(texts, type=pa.string()),
-                pa.array(spans_col, type=_SPAN_PA),
-                pa.array(pids, type=pa.int32()),
-                pa.array(in_bytes, type=pa.int64()),
-                pa.array(proc_us, type=pa.int64()),
-            ],
-            names=[n for n, _ in _COMBINED_FIELDS],
-        )
 
 
 def completed_partitions(spark: SparkSession, data_dir: str) -> set[int]:
@@ -250,7 +226,12 @@ def run_extract(
             continue
         # directory-pruned scan: only this chunk's files are read
         part = spark.read.parquet(chunk_src).select(
-            "url", "html", "partition_id"
+            "url",
+            "html",
+            "partition_id",
+            F.coalesce(F.octet_length("html"), F.lit(0))
+            .cast("long")
+            .alias("in_bytes"),
         )
         if len(todo) < len(staged):
             part = part.filter(F.col("partition_id").isin(todo))
@@ -258,7 +239,9 @@ def run_extract(
             # one task per partition_id → task-commit visibility is
             # partition-atomic even under v2/direct committers
             part = part.repartition(len(todo), "partition_id")
-        combined = part.mapInArrow(_extract_with_lineage, _COMBINED_DDL)
+        combined = part.mapInArrow(
+            partial(_extract_batches, proc_us=True), _LINEAGE_SCHEMA
+        )
         combined.withColumn("chunk_id", F.lit(chunk)).write.mode(
             "append"
         ).partitionBy("chunk_id").parquet(data_dir)

@@ -124,7 +124,9 @@ def test_null_html_extracts_empty(spark):
 def test_extract_batches_slicewise_memory_bound():
     """The fused kernel converts html Arrow->Python slice-wise: peak
     Python-side allocation stays near slice-size x page-size, not
-    batch-size x page-size, and output is unchanged for outlier rows."""
+    batch-size x page-size, and output is unchanged for outlier rows.
+    The runner's lineage mode (pass-through partition_id / in_bytes plus
+    proc_us) slices the same way and keeps every column row-aligned."""
     import tracemalloc
 
     import pyarrow as pa
@@ -134,19 +136,40 @@ def test_extract_batches_slicewise_memory_bound():
 
     big_text = ("lorem ipsum dolor sit amet " * 40_000).strip()  # ~1 MB
     htmls = [_shell(i % 7, [big_text]).encode() for i in range(40)]
-    batch = pa.RecordBatch.from_arrays(
-        [pa.array([f"u{i}" for i in range(40)]), pa.array(htmls)],
-        names=["url", "html"],
+    urls = [f"u{i}" for i in range(40)]
+    plain = pa.RecordBatch.from_arrays(
+        [pa.array(urls), pa.array(htmls)], names=["url", "html"]
     )
-    tracemalloc.start()
-    out = list(_extract_batches(iter([batch])))
-    _, peak_sliced = tracemalloc.get_traced_memory()
-    tracemalloc.stop()
-    assert sum(b.num_rows for b in out) == 40  # sliced into several batches
-    assert len(out) > 1
-    assert out[0].column("text")[0].as_py() == big_text
-    all_urls = [u for b in out for u in b.column("url").to_pylist()]
-    assert all_urls == [f"u{i}" for i in range(40)]
+    lineage = pa.RecordBatch.from_arrays(
+        [
+            pa.array(urls),
+            pa.array(htmls),
+            pa.array([i % 3 for i in range(40)], type=pa.int32()),
+            pa.array([len(h) for h in htmls], type=pa.int64()),
+        ],
+        names=["url", "html", "partition_id", "in_bytes"],
+    )
+    peaks = []
+    for batch, proc_us in ((plain, False), (lineage, True)):
+        tracemalloc.start()
+        out = list(_extract_batches(iter([batch]), proc_us=proc_us))
+        peaks.append(tracemalloc.get_traced_memory()[1])
+        tracemalloc.stop()
+        assert sum(b.num_rows for b in out) == 40  # sliced into several batches
+        assert len(out) > 1
+        assert out[0].column("text")[0].as_py() == big_text
+        rows = [r for b in out for r in b.to_pylist()]
+        assert [r["url"] for r in rows] == urls
+        if proc_us:
+            assert out[0].schema.names == [
+                "url", "text", "spans", "partition_id", "in_bytes", "proc_us"
+            ]
+            assert [r["partition_id"] for r in rows] == [i % 3 for i in range(40)]
+            assert [r["in_bytes"] for r in rows] == [len(h) for h in htmls]
+            assert all(r["proc_us"] >= 0 for r in rows)
+            assert all(r["text"] == big_text for r in rows)
+        else:
+            assert out[0].schema.names == ["url", "text", "spans"]
 
     # baseline: the pre-fix whole-batch materialization (outputs dominate
     # either way and are the batch contract; the fix removes the full
@@ -155,14 +178,15 @@ def test_extract_batches_slicewise_memory_bound():
     from comic_text_detector_spark.plans.extract import extract_document
 
     tracemalloc.start()
-    all_htmls = batch.column("html").to_pylist()
+    all_htmls = plain.column("html").to_pylist()
     texts = [extract_document(h)[0] for h in all_htmls]
     _, peak_full = tracemalloc.get_traced_memory()
     tracemalloc.stop()
     del all_htmls, texts
     total_html = sum(len(h) for h in htmls)
-    assert peak_sliced < peak_full * 0.6, (peak_sliced, peak_full)
-    assert peak_sliced < total_html, (peak_sliced, total_html)
+    for peak_sliced in peaks:
+        assert peak_sliced < peak_full * 0.6, (peak_sliced, peak_full)
+        assert peak_sliced < total_html, (peak_sliced, total_html)
 
 
 def test_entity_tail_decoding():

@@ -29,13 +29,17 @@ DOCS = [
 ]
 
 
-@pytest.mark.parametrize("pa_type", [pa.binary(), pa.large_binary()])
+@pytest.mark.parametrize(
+    "pa_type", [pa.binary(), pa.large_binary(), pa.string(), pa.large_string()]
+)
 def test_decode_html_matches_per_cell_decode(pa_type):
-    arr = pa.array(DOCS, type=pa_type)
-    want = [
-        None if b is None else b.decode("utf-8", "replace")
-        for b in arr.to_pylist()
-    ]
+    want = [None if b is None else b.decode("utf-8", "replace") for b in DOCS]
+    # string layouts hold already-decoded text (and nulls)
+    arr = pa.array(
+        want if pa_type in (pa.string(), pa.large_string()) else DOCS,
+        type=pa_type,
+    )
+    assert arr.null_count
     assert _decode_html(arr) == want
     # sliced arrays carry a nonzero offset into the shared buffers
     sl = arr.slice(3, 2)

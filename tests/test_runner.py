@@ -78,12 +78,11 @@ def test_resume_partial_partition_visibility(spark, tmp_path):
     """A committer that exposed only SOME of a chunk's partitions before a
     crash (fileoutputcommitter v2 / direct-write / speculative commits) must
     not make resume skip the chunk's remaining partitions (ADVICE r1)."""
+    import functools
     import os
 
-    from comic_text_detector_spark.plans.runner import (
-        _COMBINED_DDL,
-        _extract_with_lineage,
-    )
+    from comic_text_detector_spark.plans.extract import _extract_batches
+    from comic_text_detector_spark.plans.runner import _LINEAGE_SCHEMA
 
     out = str(tmp_path / "job")
     corpus = corpus_df(spark, 60)
@@ -105,10 +104,15 @@ def test_resume_partial_partition_visibility(spark, tmp_path):
     )
     assert len(pids) >= 2  # the scenario needs a partially visible chunk
     partial = staged.filter(F.col("partition_id") == pids[0]).select(
-        "url", "html", "partition_id"
+        "url",
+        "html",
+        "partition_id",
+        F.octet_length("html").cast("long").alias("in_bytes"),
     )
     (
-        partial.mapInArrow(_extract_with_lineage, _COMBINED_DDL)
+        partial.mapInArrow(
+            functools.partial(_extract_batches, proc_us=True), _LINEAGE_SCHEMA
+        )
         .withColumn("chunk_id", F.lit(1))
         .write.mode("append")
         .partitionBy("chunk_id")
@@ -126,6 +130,31 @@ def test_resume_partial_partition_visibility(spark, tmp_path):
     extracted = read_extracted(spark, out)
     assert extracted.count() == n_urls
     assert extracted.select("url").distinct().count() == n_urls
+
+
+def test_null_url_and_null_html_rows(spark, tmp_path):
+    """A staged row with a null url or null html is extracted, not a
+    failed task: null html yields text '' and in_bytes 0."""
+    body = "a document whose url is null but whose body is long enough"
+    html = f"<p>{body}</p>".encode()
+    docs = spark.createDataFrame(
+        [(None, html), ("https://a.example/1", None)], "url string, html binary"
+    ).withColumn("warc_ts", F.lit("2026-01-01 00:00:00").cast("timestamp"))
+    out = str(tmp_path / "job")
+    run_extract(spark, docs, out, num_partitions=2, num_chunks=1)
+    rows = sorted(
+        spark.read.parquet(out + "/extracted")
+        .select("url", "text", "in_bytes")
+        .collect(),
+        key=lambda r: r.in_bytes,
+    )
+    assert [(r.url, r.text, r.in_bytes) for r in rows] == [
+        ("https://a.example/1", "", 0),
+        (None, body, len(html)),
+    ]
+    assert read_metrics(spark, out).agg(F.sum("bytes")).collect()[0][0] == len(
+        html
+    )
 
 
 def test_incremental_snapshots_watermark(spark, tmp_path):
